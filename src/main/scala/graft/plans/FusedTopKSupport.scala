@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import graft.functions.TopKBuffer
 
 /** Shared scan/merge machinery for the two fused top-k physical operators
-  * ([[VectorTopKJoinExec]], [[VectorTopKAggExec]]).
+  * ([[VectorTopKJoinExec]], [[VectorTopKAggExec]]); the per-row scoring
+  * kernel also serves `SearchEngine`'s in-memory index.
   *
   * Scan: each corpus partition is read ONCE, maintaining one bounded heap
   * per query row; partials are (qid, score, id) tuples — partitions ×
@@ -39,10 +40,45 @@ private[graft] object FusedTopKSupport {
       : Array[(Long, Array[Float], Double)] =
     queries.executeCollect().map { row =>
       val vec = row.getArray(qvIdx).toFloatArray()
-      var n = 0.0
-      vec.foreach(x => n += x.toDouble * x.toDouble)
-      (row.getLong(qidIdx), vec, math.sqrt(n))
+      (row.getLong(qidIdx), vec, norm(vec, 0, vec.length))
     }
+
+  /** L2 norm of `v(off until off + n)`, squares summed in double left to
+    * right — the [[graft.functions.CosineSimilarity]] accumulation. */
+  def norm(v: Array[Float], off: Int, n: Int): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < n) { val x = v(off + i).toDouble; s += x * x; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** The scan kernel: cosine of one corpus vector `v(off until off + n)`
+    * (norm `vNorm`, id `vid`) against every query in `qs`, each score
+    * `>= minScore` offered to that query's heap. Dot products accumulate
+    * in double left to right over the shorter of the two vectors, and a
+    * zero norm on either side scores 0.0 — [[graft.functions.CosineSimilarity]]'s
+    * arithmetic. The fused operators and `SearchEngine`'s serving index
+    * both score through here, so their results cannot drift apart. */
+  def scoreRow(qs: Array[(Long, Array[Float], Double)], heaps: Array[TopKBuffer],
+               v: Array[Float], off: Int, n: Int, vNorm: Double, vid: Long,
+               minScore: Double): Unit = {
+    var q = 0
+    while (q < qs.length) {
+      val (_, qv, qNorm) = qs(q)
+      val d = math.min(n, qv.length)
+      var dot = 0.0
+      var i = 0
+      while (i < d) { dot += qv(i).toDouble * v(off + i).toDouble; i += 1 }
+      val score =
+        if (qNorm == 0.0 || vNorm == 0.0) 0.0
+        else dot / (qNorm * vNorm)
+      if (score >= minScore) heaps(q).add(score, vid)
+      q += 1
+    }
+  }
+
+  /** Output score: floored to the 1e-6 grid for engine-portable results. */
+  def floorScore(s: Double): Double = math.floor(s * 1e6) / 1e6
 
   /** One corpus pass → keyed partial heap entries (qid -> (score, id)).
     *
@@ -68,30 +104,9 @@ private[graft] object FusedTopKSupport {
         // null-skip mirrors the declarative path (null-safe Catalyst
         // eval + TopKByScore null skip)
         if (!row.isNullAt(vidIdx) && !row.isNullAt(embIdx)) {
-          val vid = row.getLong(vidIdx)
-          val emb = row.getArray(embIdx)
-          val n = emb.numElements()
-          var cNorm = 0.0
-          val ev = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            val x = emb.getFloat(i).toDouble
-            ev(i) = x; cNorm += x * x; i += 1
-          }
-          cNorm = math.sqrt(cNorm)
-          var q = 0
-          while (q < qs.length) {
-            val (_, qv, qNorm) = qs(q)
-            val d = math.min(n, qv.length)
-            var dot = 0.0
-            i = 0
-            while (i < d) { dot += qv(i).toDouble * ev(i); i += 1 }
-            val score =
-              if (qNorm == 0.0 || cNorm == 0.0) 0.0
-              else dot / (qNorm * cNorm)
-            if (score >= minScore) heaps(q).add(score, vid)
-            q += 1
-          }
+          val ev = row.getArray(embIdx).toFloatArray()
+          scoreRow(qs, heaps, ev, 0, ev.length, norm(ev, 0, ev.length),
+            row.getLong(vidIdx), minScore)
         }
       }
       heaps.iterator.zipWithIndex.flatMap { case (h, q) =>

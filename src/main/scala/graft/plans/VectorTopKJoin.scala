@@ -32,6 +32,13 @@ case class VectorTopKJoin(
   // output attrs are generated by this operator, not drawn from children
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     outputSet
+  // The node holds no expressions, so the default `references` is empty
+  // and ColumnPruning would prune both children down to nothing under a
+  // Project; declare the four columns the physical operator reads.
+  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
+    org.apache.spark.sql.catalyst.expressions.AttributeSet(
+      queries.output.filter(a => a.name == "query_id" || a.name == "qv") ++
+        corpus.output.filter(a => a.name == "vec_id" || a.name == "embedding"))
   override protected def withNewChildrenInternal(
       l: LogicalPlan, r: LogicalPlan): VectorTopKJoin =
     copy(queries = l, corpus = r)
@@ -126,7 +133,7 @@ case class VectorTopKJoinExec(
       val proj = UnsafeProjection.create(types)
       merged.flatMap { case (qid, heap) =>
         heap.sorted.iterator.zipWithIndex.map { case ((s, id), r) =>
-          proj(InternalRow(qid, (r + 1).toLong, id, math.floor(s * 1e6) / 1e6))
+          proj(InternalRow(qid, (r + 1).toLong, id, FusedTopKSupport.floorScore(s)))
         }
       }
     }

@@ -27,8 +27,9 @@ final case class Tables(spark: SparkSession, dir: String,
     * before a broadcast build is pure overhead. */
   private def f(name: String): DataFrame =
     if (spread)
-      Tables.parallelismFloor(t(name),
-        cacheKey = Some(s"${spark.sparkContext.applicationId}:$dir/$name"))
+      Tables.parallelismFloor(t(name), cacheKey = Some(
+        s"${spark.sparkContext.applicationId}:" +
+          CorpusFingerprint(spark, s"$dir/$name.parquet")))
     else t(name)
 
   def region: DataFrame     = t("region")
@@ -98,13 +99,14 @@ object Tables {
     * pruning through a Repartition node, so scans keep their
     * PushedFilters/ReadSchema. */
   /** The floor DECISION (repartition target, or 0 for no-op) cached per
-    * (application, path, cores, targetBytes): deciding costs two extra
-    * plannings of the scan (a stats pass plus the `df.rdd` partition-count
-    * probe), which every documents access paid — ~130 consumers × 2 plans
-    * per suite of pure driver time. The decision is size-derived and
-    * perf-only, so caching it cannot change results; a corpus REGENERATED
-    * at the same path inside one long-lived application keeps the old
-    * floor (worst case: a suboptimal partition count, never wrong rows). */
+    * (application, [[CorpusFingerprint]] of the table's files, cores,
+    * targetBytes): deciding costs two extra plannings of the scan (a stats
+    * pass plus the `df.rdd` partition-count probe), which every documents
+    * access paid — ~130 consumers × 2 plans per suite of pure driver time.
+    * The decision is size-derived and perf-only, so caching it cannot
+    * change results; keying on the file listing rather than the path makes
+    * a corpus REGENERATED at the same path inside one application get a
+    * fresh decision instead of the old one. */
   private val floorDecisions =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 

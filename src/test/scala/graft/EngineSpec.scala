@@ -1,10 +1,157 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import graft.functions.hash_embed
+import graft.functions.TextFunctions.preprocess
+import graft.operators.Search
 
 class EngineSpec extends SparkSuite {
 
   lazy val engine = new SearchEngine(spark, sfDir)
+
+  /** The batch answers the engine's requests must equal: the per-request
+    * plans `SearchEngine` ran before it served from an in-memory index —
+    * `bruteForceTopK` (k capped at 20) joined back to the documents for
+    * descriptions, and `thresholdRetrieval` at distance 0.4 — for every
+    * query in one batch. Keyed by query text. */
+  private def batchAnswers(dir: String, texts: Seq[String], k: Int)
+      : (Map[String, Seq[Row]], Map[String, Seq[Row]], DataFrame, DataFrame) = {
+    import spark.implicits._
+    val docs = sources.Tables(spark, dir).documents
+    val corpus = docs.select(col("doc_id").as("vec_id"),
+      hash_embed(preprocess(col("text")), 64).as("embedding"))
+    val q = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("query_id", "text")
+      .select(col("query_id"), hash_embed(preprocess(col("text")), 64).as("qv"))
+    val search = Search.bruteForceTopK(q, corpus, math.min(k, 20))
+      .join(docs.select(col("doc_id").as("vec_id"), col("text")), Seq("vec_id"))
+      .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"),
+        col("score"), col("text").as("description"))
+    val qa = Search.thresholdRetrieval(q, corpus, maxDistance = 0.4)
+    def byText(df: DataFrame): Map[String, Seq[Row]] = {
+      val rows = df.collect().toSeq.groupBy(_.getLong(0))
+      texts.zipWithIndex.map { case (t, i) =>
+        t -> rows.getOrElse(i.toLong, Nil).map(r => Row(r.toSeq.tail: _*))
+          .sortBy(_.getLong(0))
+      }.toMap
+    }
+    (byText(search), byText(qa), search.drop("query_id"), qa)
+  }
+
+  private def columns(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+
+  /** Jobs started while `body` runs, after earlier events are drained. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; bridge.drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  /** `docs` as `dir/documents.parquet`, replacing what is there. */
+  private def writeCorpus(dir: String, docs: Seq[(Long, String)]): Unit = {
+    import spark.implicits._
+    docs.toDF("doc_id", "text").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  test("search and qaContext equal the batch top-k over sf0.01, exactly") {
+    val dir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val eng = new SearchEngine(spark, dir)
+    val texts = sources.Tables(spark, dir).documents
+      .filter(col("doc_id") % 40 === 7).orderBy("doc_id")
+      .select("text").as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().map(_.take(120)).toSeq
+    val queries = texts ++ Seq(
+      "fast hash join on the big table", "window agg", "vector scan filter",
+      "THC: 12.5% sativa-dominant hash join", "thc 20 indica dominant stream",
+      "cbd:12 window agg", "CBD: 3.5% hybrid-dominant vector table",
+      "Spark, SQL & streams!!", "table", "scan scan scan scan",
+      "quasar nebula pulsar magnetar",     // off-corpus words
+      "!!! ??? ...",                       // embeds to zero: every score ties
+      "the a", "customer line part order supplier nation region",
+      "merge sort key batch", "slow small group row column",
+      "value data query stream", "join join window window")
+    assert(queries.size >= 30)
+    Seq(1, 3, 20, 25).foreach { k =>
+      val (search, qa, searchDf, qaDf) = batchAnswers(dir, queries, k)
+      queries.foreach { text =>
+        val got = eng.search(text, k)
+        assert(columns(got) == columns(searchDf))
+        assert(got.collect().toSeq == search(text), s"search('$text', $k)")
+        val ctx = eng.qaContext(text)
+        assert(columns(ctx) == columns(qaDf))
+        assert(ctx.collect().toSeq.map(r => Row(r.toSeq.tail: _*)) == qa(text),
+          s"qaContext('$text')")
+      }
+      if (k == 20) {
+        // the zero-vector query ties every doc at 0.0: ranks break by doc id
+        val tied = search("!!! ??? ...")
+        assert(tied.map(_.getDouble(2)).distinct == Seq(0.0))
+        assert(tied.map(_.getLong(1)) == tied.map(_.getLong(1)).sorted)
+        // and ties inside a real answer break the same way
+        assert(queries.exists { t =>
+          search(t).sliding(2).exists(p => p.size == 2 && p(0).getDouble(2) == p(1).getDouble(2))
+        })
+      }
+    }
+  }
+
+  test("a corpus rewritten in place is served on the next request") {
+    val dir = Files.createTempDirectory("graft-engine-fresh").toString
+    val base = sources.Tables(spark, sfDir).documents.select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+    writeCorpus(dir, base)
+    val eng = new SearchEngine(spark, dir)
+    val gone = base(5)
+    assert(eng.search(gone._2, 3).head().getLong(1) == gone._1)
+
+    val edited = (base(3)._1, "zebra quokka marmoset")
+    val appended = (base.map(_._1).max + 1000, "narwhal axolotl pangolin")
+    writeCorpus(dir, base.filterNot(_ == gone).map(d => if (d._1 == edited._1) edited else d) :+ appended)
+
+    Seq(edited, appended).foreach { case (id, text) =>
+      val top = eng.search(text, 3).head()
+      assert(top.getLong(1) == id && top.getString(3) == text)
+      assert(eng.qaContext(text).head().getLong(1) == id)
+    }
+    assert(!eng.search(gone._2, 20).collect().exists(_.getLong(1) == gone._1))
+    assert(eng.qaContext(gone._2).head().getLong(1) != gone._1)
+  }
+
+  test("second search and qaContext on an unchanged corpus run no Spark job") {
+    val eng = new SearchEngine(spark, sfDir)
+    // the first request builds the index: that one does run jobs
+    assert(jobsDuring(eng.search("window agg", 5).collect()) > 0)
+    eng.qaContext("window agg").collect()
+    assert(jobsDuring {
+      eng.search("fast hash join on the big table", 5).collect()
+      eng.qaContext("fast hash join on the big table").collect()
+      assert(eng.healthCheck())
+    } == 0)
+  }
+
+  test("an empty corpus answers with no rows, like the batch top-k") {
+    val dir = Files.createTempDirectory("graft-engine-empty").toString
+    writeCorpus(dir, Nil)
+    val eng = new SearchEngine(spark, dir)
+    val (search, qa, _, _) = batchAnswers(dir, Seq("window agg"), 3)
+    assert(search("window agg").isEmpty && qa("window agg").isEmpty)
+    assert(eng.search("window agg", 3).collect().isEmpty)
+    assert(eng.qaContext("window agg").collect().isEmpty)
+    assert(!eng.healthCheck())
+  }
 
   test("entry flagship returns search results") {
     val rows = SparkEntry.entry(spark).collect()

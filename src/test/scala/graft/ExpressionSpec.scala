@@ -481,4 +481,21 @@ class ExpressionSpec extends SparkSuite {
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
     assert(interp.toSeq == got(1).toSeq)
   }
+
+  test("fused top-k survives a projection plus an aggregate on top") {
+    // a whole-row digest above the operator: ColumnPruning must keep the
+    // four columns VectorTopKJoin reads in its children
+    val emb = graft.sources.Tables(spark, sfDir).embeddings
+    val q = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    def digest(df: org.apache.spark.sql.DataFrame): Row =
+      df.select(xxhash64(to_json(struct(col("*")))).as("h"))
+        .agg(count(lit(1)), sum(col("h").cast("decimal(38,0)"))).head()
+    val reference = digest(graft.operators.Search.bruteForceTopK(q, emb, 5))
+    assert(reference.getLong(0) == 25L)
+    assert(digest(graft.operators.Search.fusedTopK(q, emb, 5)) == reference)
+    val even = col("label") % 2 === 0
+    assert(digest(graft.operators.Search.filteredTopK(q, emb, even, 5)) ==
+      digest(graft.operators.Search.bruteForceTopK(q, emb.filter(even), 5)))
+  }
 }

@@ -52,4 +52,21 @@ class SourceSpec extends SparkSuite {
     assert(got.select("doc_id").orderBy("doc_id")
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
   }
+
+  test("floor decision follows a corpus regenerated at the same path") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-src-floor").toString
+    def write(docs: Seq[(Long, String)]): Int = {
+      docs.toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      Tables(spark, dir, spread = true).documents.rdd.getNumPartitions
+    }
+    // one small file: under the 64 KB floor target, no repartition
+    assert(write((0L until 10L).map(i => (i, s"doc $i"))) == 1)
+    // the same path regenerated as one ~400 KB file of incompressible
+    // text: past the target, so the floor now fans it out to the cores
+    val rnd = new scala.util.Random(7)
+    val big = (0L until 4000L).map(i => (i, Seq.fill(100)(rnd.nextInt(16).toHexString).mkString))
+    assert(write(big) == spark.sparkContext.defaultParallelism)
+  }
 }

@@ -27,7 +27,12 @@
 #   leg 5: scale-evidence coverage (key_gate.py --scale): every catalog
 #          key must appear in this round's saturated benches AND be
 #          checked-or-exempted by the scaling artifact — no key ships
-#          decade-blind (the r18 dedup_jaccard_incremental hole).
+#          decade-blind (the r18 dedup_jaccard_incremental hole);
+#   leg 6: request-path correctness: the benchmark's qa_refresh workload
+#          (perfbench/run.py, seed 1001, 10 s) must report "correct":true
+#          with "failed":0 — every search/qaContext answer equals the
+#          batch top-k, edited and appended docs come back at rank 1 and
+#          deleted docs never do, so a stale serving index cannot pass.
 # Legs 3-4 were manual steps through round 17 (the advice: a future
 # round could skip them); now the close is this script or nothing.
 #
@@ -99,5 +104,13 @@ echo "records-scaling gate OK: tools/scaling_r${N}.json"
 # carried zero decade evidence and nothing failed.
 python3 tools/key_gate.py SURVEY.md "$OUT" ${CORR:+"$CORR"} \
   --scale "$SMALL" "$BIG" "tools/scaling_r${N}.json"
+
+QA="$(python3 perfbench/run.py --workload qa_refresh --seed 1001 \
+  --seconds 10 --trace 0 | tail -1)" \
+  || { echo "request-path leg FAILED: the workload did not finish"; exit 1; }
+python3 -c 'import json, sys; d = json.loads(sys.argv[1]); \
+  sys.exit(0 if d["correct"] is True and d["failed"] == 0 else 1)' "$QA" \
+  || { echo "request-path leg FAILED: $QA"; exit 1; }
+echo "request-path leg OK: $QA"
 
 echo "round gate OK: $OUT vs $PREV"
